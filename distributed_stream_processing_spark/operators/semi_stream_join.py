@@ -23,6 +23,16 @@ lineage truncation amortized, with the per-batch cost O(batch), the
 eviction over-stay bounded by the window, and coalesce bounding
 partition width at each compaction.
 
+Checkpoint planning: the state leaves (batch keys, missed keys,
+compaction folds) are planned with AQE off (lazy_local_checkpoint) so
+they materialize inside the batch's one combined action. The fetch
+leaf is planned with AQE on (adaptive_local_checkpoint): its only
+query stage is the missed-key broadcast, which runs at checkpoint
+time under either planner, and an all-hit batch's empty broadcast
+prunes the fetch to an empty leaf with no partitions, so the store is
+never read. The output checkpoint is AQE-planned as well (its joins
+need runtime broadcast decisions).
+
 Semantic invariant (tested): output == plain stream ⋈ store for every
 cache state — the cache is transparent.
 """
@@ -45,6 +55,7 @@ from distributed_stream_processing_spark.streaming.plan_timing import (
 )
 from distributed_stream_processing_spark.operators.skew import bounded_broadcast
 from distributed_stream_processing_spark.streaming.checkpoint import (
+    adaptive_local_checkpoint,
     lazy_local_checkpoint,
     release_checkpoint,
 )
@@ -74,7 +85,9 @@ class SemiStreamJoin:
     # any object with fetch(missed_keys) -> DataFrame in the store's
     # schema. None = the default in-session scan-side semi-join; a
     # PushdownKeyedFetcher turns the miss path into the external
-    # WHERE key IN (...) shape a 100 TB store needs.
+    # WHERE key IN (...) shape a 100 TB store needs. The returned plan
+    # is checkpointed with AQE on, so it must not shuffle (broadcast
+    # joins and filtered scans only).
     fetcher: object | None = None
     cache: DataFrame | None = None
     lru: DataFrame | None = None  # (key, last_seen)
@@ -185,7 +198,9 @@ class SemiStreamJoin:
         # to the JOIN phase via the checkpoint-input extra instead of
         # riding inside the fetch leaf's RDD and inflating fetch_s —
         # the controller signal a zero-miss batch must read ~0 on
-        # (pinned by test_attributor_survives_aqe_pruned_fetch_branch)
+        # (pinned by test_attributor_survives_aqe_pruned_fetch_branch).
+        # Its broadcast is also the fetch leaf's only query stage,
+        # which is what lets that leaf be planned adaptively below
         missed_in = batch_keys.join(F.broadcast(hit_keys), k, "left_anti")
         missed_keys = lazy_local_checkpoint(missed_in, cols=[k])
         miss = batch.join(F.broadcast(missed_keys), k, "left_semi")
@@ -202,7 +217,10 @@ class SemiStreamJoin:
         # toDF gives each batch's leaf fresh output ids (all fetch
         # leaves would otherwise inherit the store's).
         # a fetcher may DECLINE (return None — AutoFetcher's scan pick
-        # with no delegate): the pipeline then runs its inline default
+        # with no delegate): the pipeline then runs its inline default.
+        # Planned with AQE ON (module docstring): an all-hit batch's
+        # empty missed-key broadcast prunes the leaf to no partitions,
+        # so the store is never read and the cache view gains no tasks
         fetch_in = (
             self.fetcher.fetch(missed_keys)
             if self.fetcher is not None
@@ -212,7 +230,7 @@ class SemiStreamJoin:
             fetch_in = self.store.join(
                 F.broadcast(missed_keys), k, "left_semi"
             )
-        fetched = lazy_local_checkpoint(
+        fetched = adaptive_local_checkpoint(
             fetch_in, cols=list(self.store.columns)
         )
 
@@ -261,9 +279,10 @@ class SemiStreamJoin:
         # and the miss-detect rides its OWN leaf input (missed_in), so
         # fetch_in's plan embeds nothing but the store scan + one
         # leaf-scan broadcast — fetch_s is exactly the store-fetch
-        # cost the controller's window policy feeds on, and a
-        # zero-miss batch reads it ~0
-        # (test_attributor_survives_aqe_pruned_fetch_branch).
+        # cost the controller's window policy feeds on. fetch_in was
+        # planned adaptively (the fetch leaf above), so on a zero-miss
+        # batch its resolved plan is an empty relation and fetch_s
+        # reads 0 (test_attributor_survives_aqe_pruned_fetch_branch).
         extra_roots = [
             ("join", out_in),
             ("join", missed_in),
@@ -272,7 +291,8 @@ class SemiStreamJoin:
         if compact:
             # latest-wins fold of base + every pending key set; the
             # key-set joins carry explicit broadcast hints (these
-            # plans are AQE-off under lazy_local_checkpoint, where an
+            # plans are AQE-off under lazy_local_checkpoint — they
+            # shuffle, so AQE would run them at the call — where an
             # unhinted join against checkpointed state compiles to a
             # sort-merge join); the EVICTION sets (stale, hot) are
             # only usually small — after a workload shift stale can be
@@ -338,7 +358,9 @@ class SemiStreamJoin:
         # 'm' subtree, which is JOIN work — so m is tagged join and
         # walked before x, leaving the fetch phase owning exactly the
         # store scan + fetch join the controller's window policy
-        # feeds on (an AQE-pruned zero-miss fetch then reads ~0)
+        # feeds on. On a zero-miss batch the fetch leaf was already
+        # pruned to an empty relation when it was checkpointed
+        # adaptively, so x scans no partition and fetch reads ~0
         branch_phases = ["join", "join", "fetch", "join"]
         branch_tags = ["m", "k", "x", "o"]
         walk_order = [1, 0, 2, 3]

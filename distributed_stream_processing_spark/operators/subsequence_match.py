@@ -1514,12 +1514,17 @@ def subsequence_match_znorm(
                 sd = np.sqrt(var)
                 pos_sd = sd > 0
                 sxq = X @ qn
-                d2 = np.where(
-                    pos_sd,
-                    m
-                    - 2.0 * (sxq - mu * sqn) / np.where(pos_sd, sd, 1.0)
-                    + sqq,
-                    sqq,
+                # clamped like the cnsm twin: an exact match cancels
+                # to ±1e-14, and sqrt of a negative d² is NaN
+                d2 = np.maximum(
+                    np.where(
+                        pos_sd,
+                        m
+                        - 2.0 * (sxq - mu * sqn) / np.where(pos_sd, sd, 1.0)
+                        + sqq,
+                        sqq,
+                    ),
+                    0.0,
                 )
                 hit = d2 <= eps2
                 yield pdl.DataFrame(

@@ -138,10 +138,14 @@ def pushdown_applies(
     key-clustered AND (the store outgrows memory, or the expected miss
     set is small — but non-zero — so the keyed lookup beats even the
     warm scan). An expectation of ZERO misses keeps the scan: there is
-    (probably) nothing to fetch, the in-plan scan against an empty key
-    set costs nothing extra inside the batch's combined action, while
-    the pushdown's key collect is an unconditional extra driver job
-    per batch (measured +0.3 s/batch on all-hit sf0.1 q33 batches).
+    (probably) nothing to fetch, and the in-plan scan against an empty
+    key set costs no store read, because the equi pipeline plans its
+    fetch leaf adaptively and an empty missed-key broadcast prunes the
+    scan (perfbench ``dsjoin_hot``, 1M-row store, all-hit batches:
+    ``fetch.task_s`` 0.000 task-s per batch; 0.52-0.59 when the leaf
+    was planned statically and read the whole store anyway). The
+    pushdown's key collect is an unconditional extra driver job per
+    batch (measured +0.3 s/batch on all-hit sf0.1 q33 batches).
     See auto_fetcher's docstring for the crossover measurements."""
     return key_clustered and (
         store_bytes > memory_bytes
@@ -240,9 +244,12 @@ def auto_fetcher(
       (``store_bytes > memory_bytes``) → ``PushdownKeyedFetcher``.
       The scan floor is disk-bound and store-size-linear (5.75-22 s
       measured cold at 1 GB); pushdown stays O(misses).
-    * clustered AND the batch's miss set is small
-      (``expected_misses <= SMALL_MISS_THRESHOLD``) →
+    * clustered AND the batch's miss set is small but non-zero
+      (``0 < expected_misses <= SMALL_MISS_THRESHOLD``) →
       ``PushdownKeyedFetcher``: 3-7x under even the warm scan floor.
+      ``expected_misses=0`` keeps ``SemiScanFetcher`` (see
+      ``pushdown_applies``: an empty scan fetch reads nothing, the
+      pushdown still pays its driver collect).
     * otherwise (memory-resident store, big miss sets) →
       ``SemiScanFetcher``: one warm scan + broadcast semi-join, no
       per-batch driver collect.

@@ -18,6 +18,21 @@ verify as designed (X8 lineage truncation, one action per batch).
 The state subplans lose nothing from static planning: every join in
 them carries an explicit broadcast hint, and their output
 partitioning is pinned by coalesce.
+
+``adaptive_local_checkpoint`` plans the checkpoint with AQE ON. That
+is safe — no job is added — when the plan's only query stages are
+broadcasts: the static planner already runs a broadcast hash join's
+build side at checkpoint time (building the RDD waits for the
+broadcast), so AQE executes exactly the job static planning would.
+What it adds is runtime re-optimization on the materialized build
+side: an EMPTY broadcast under an inner or semi join propagates to an
+empty relation, the probe side is never planned, and the leaf is an
+RDD with no partitions. DS-Join's store fetch,
+``store ⋉ broadcast(missed_keys)``, is that shape: an all-hit batch
+then never reads the store, while a batch with misses gets the same
+broadcast LeftSemi as the static plan. A plan with a shuffle must not
+use it — the shuffle would run at the checkpoint call, outside the
+batch's combined action.
 """
 
 from __future__ import annotations
@@ -32,6 +47,30 @@ from pyspark.sql import DataFrame
 # that visible: the soak (tools/soak_q48.py) asserts succeeded ==
 # attempted on top of its persisted-RDD boundedness check.
 RELEASE_STATS = {"attempted": 0, "succeeded": 0}
+
+
+def _local_checkpoint(
+    df: DataFrame, cols: list[str] | None, adaptive: bool
+) -> DataFrame:
+    spark = df.sparkSession
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true" if adaptive else "false")
+    try:
+        out = df.localCheckpoint(eager=False)
+    finally:
+        spark.conf.set(key, prev)
+    jrdd = None
+    try:
+        plan = out._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            jrdd = plan.rdd()
+    except Exception:
+        jrdd = None
+    if cols is not None:
+        out = out.toDF(*cols)
+    out._ckpt_jrdd = jrdd
+    return out
 
 
 def lazy_local_checkpoint(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
@@ -49,25 +88,18 @@ def lazy_local_checkpoint(df: DataFrame, cols: list[str] | None = None) -> DataF
     needs because ``DataFrame.unpersist()`` cannot release checkpoint
     blocks (they are RDD-level persisted, not CacheManager entries;
     ADVICE r15)."""
-    spark = df.sparkSession
-    key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        out = df.localCheckpoint(eager=False)
-    finally:
-        spark.conf.set(key, prev)
-    jrdd = None
-    try:
-        plan = out._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            jrdd = plan.rdd()
-    except Exception:
-        jrdd = None
-    if cols is not None:
-        out = out.toDF(*cols)
-    out._ckpt_jrdd = jrdd
-    return out
+    return _local_checkpoint(df, cols, adaptive=False)
+
+
+def adaptive_local_checkpoint(
+    df: DataFrame, cols: list[str] | None = None
+) -> DataFrame:
+    """``lazy_local_checkpoint`` planned with AQE on (see the module
+    docstring): only for plans whose query stages are all broadcasts,
+    so the call runs no job the static plan would not, and an empty
+    broadcast build side prunes the join to an empty leaf. Same
+    ``cols`` rename, ``_ckpt_jrdd`` handle and concurrency caveat."""
+    return _local_checkpoint(df, cols, adaptive=True)
 
 
 def release_checkpoint(df: DataFrame) -> None:

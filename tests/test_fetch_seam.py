@@ -12,8 +12,10 @@ ds_join/DS_SimJoin_stream.scala:774-832).
 
 from __future__ import annotations
 
+import shutil
 from fractions import Fraction
 
+import pytest
 from pyspark.sql import functions as F
 
 from distributed_stream_processing_spark.operators.semi_stream_join import (
@@ -82,6 +84,37 @@ def test_pipeline_transparent_through_pushdown_fetcher(spark, tmp_path):
         f"{fetcher.pushed_counts}"
     )
     j.close()
+
+
+def test_all_hit_batch_never_reads_the_store(spark, tmp_path):
+    """An all-hit batch's fetch leaf is planned adaptively, so its
+    empty missed-key broadcast prunes the store scan away: with the
+    store's files deleted, the batch still returns the plain
+    batch ⋈ store rows, and a later batch with one uncached key fails
+    on the missing files — proof the first batch would have caught a
+    scan."""
+    store_path = str(tmp_path / "store.parquet")
+    kv = lambda df: df.select(  # noqa: E731
+        F.col("id").alias("k"), (F.col("id") * 7).alias("v")
+    )
+    kv(spark.range(10_000)).write.parquet(store_path)
+    store = spark.read.parquet(store_path)
+    # the initial cache is a separate copy covering every batch key
+    cache = kv(spark.range(200))
+    batch = spark.range(1_000).select(
+        (F.col("id") % 200).alias("k"), F.col("id").alias("e")
+    )
+    want = sorted(batch.join(store, "k").select("k", "e", "v").collect())
+    j = SemiStreamJoin(store=store, key="k", initial_cache=cache)
+    try:
+        shutil.rmtree(store_path)
+        out = j.process_batch(batch, 0)
+        assert sorted(out.select("k", "e", "v").collect()) == want
+        missed = spark.createDataFrame([(5_000, 0)], "k long, e long")
+        with pytest.raises(Exception, match="FILE_NOT_EXIST|does not exist"):
+            j.process_batch(missed, 1).collect()
+    finally:
+        j.close()
 
 
 def test_semi_scan_fetcher_matches_default(spark):
@@ -174,6 +207,11 @@ def test_auto_fetcher_policy_boundaries(spark):
     # unknown miss volume (None) on a memory-resident store: scan
     assert pick(store_bytes=1 * GB, key_clustered=True,
                 memory_bytes=2 * GB) == "SemiScanFetcher"
+    # an expected ZERO misses keeps the scan: an empty scan fetch
+    # reads nothing, the pushdown would still pay its key collect
+    assert pick(store_bytes=1 * GB, key_clustered=True,
+                memory_bytes=2 * GB, expected_misses=0
+                ) == "SemiScanFetcher"
 
 
 def test_auto_fetcher_selected_pushdown_is_wired(spark, tmp_path):

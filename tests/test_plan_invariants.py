@@ -164,14 +164,18 @@ def test_lineitem_scan_column_pruned(spark, specs, name):
 
 
 def _captured_batch_plans(spark, specs, name, monkeypatch):
-    """Run a registered semi-stream pipeline and return each batch's
-    plan text: the combined-action executed plan (captured at the
-    attribution seam) PLUS the static plans of everything the batch
-    routed through lazy_local_checkpoint. Since r15 the per-batch
-    fetch/probe deltas are pinned as checkpoint LEAVES (LogicalRDD),
-    so the combined action prints them as Scan ExistingRDD — their
-    join/explode shapes only exist in the checkpoint inputs' resolved
-    plans, captured here at the checkpoint seam."""
+    """Run a registered semi-stream pipeline and return
+    ``(plans, fetch_plans, result)``: per-batch plan texts and the
+    query's result frame. ``plans`` holds the combined-action
+    executed plan (captured at the attribution seam) PLUS the resolved
+    plans of everything the batch checkpointed. Since r15 the
+    per-batch fetch/probe deltas are pinned as checkpoint LEAVES
+    (LogicalRDD), so the combined action prints them as Scan
+    ExistingRDD — their join/explode shapes only exist in the
+    checkpoint inputs' resolved plans, captured here at the
+    checkpoint seams. ``fetch_plans`` holds only the leaves pinned by
+    adaptive_local_checkpoint (the DS-Join store fetch), so a fetch
+    assertion cannot be met by some other leaf's join."""
     from distributed_stream_processing_spark.operators import (
         semi_stream_join as ssj,
     )
@@ -179,6 +183,7 @@ def _captured_batch_plans(spark, specs, name, monkeypatch):
         semi_stream_similarity as sss,
     )
     from distributed_stream_processing_spark.streaming.checkpoint import (
+        adaptive_local_checkpoint as real_adaptive,
         lazy_local_checkpoint as real_ckpt,
     )
     from distributed_stream_processing_spark.streaming.plan_timing import (
@@ -186,42 +191,75 @@ def _captured_batch_plans(spark, specs, name, monkeypatch):
     )
 
     plans: list[str] = []
+    fetch_plans: list[str] = []
     pending: list[str] = []
+    pending_fetch: list[str] = []
 
-    def capture_ckpt(df, *a, **k):
-        out = real_ckpt(df, *a, **k)
-        # the checkpoint resolved (and memoized) the input's physical
-        # plan AQE-off inside real_ckpt — read it back for the audit
-        pending.append(_plan(df))
-        return out
+    def capturing(real, sink):
+        def ckpt(df, *a, **k):
+            out = real(df, *a, **k)
+            # the checkpoint resolved (and memoized) the input's
+            # physical plan inside real — read it back for the audit
+            sink.append(_plan(df))
+            return out
+
+        return ckpt
 
     def capture(self, df, *a, **k):
-        plans.append("\n".join(pending + [_plan(df)]))
+        plans.append("\n".join(pending + pending_fetch + [_plan(df)]))
+        fetch_plans.append("\n".join(pending_fetch))
         pending.clear()
+        pending_fetch.clear()
         return None  # estimate fallback — capture only
 
     monkeypatch.setattr(PlanTimeAttributor, "attribute", capture)
     for mod in (ssj, sss):
-        monkeypatch.setattr(mod, "lazy_local_checkpoint", capture_ckpt)
-    specs[name].fn(spark, SF)  # per-batch actions run inside
-    return plans
+        monkeypatch.setattr(
+            mod, "lazy_local_checkpoint", capturing(real_ckpt, pending)
+        )
+    monkeypatch.setattr(
+        ssj, "adaptive_local_checkpoint", capturing(real_adaptive, pending_fetch)
+    )
+    result = specs[name].fn(spark, SF)  # per-batch actions run inside
+    return plans, fetch_plans, result
 
 
 def test_q33_batch_plan_left_semi_no_smj(spark, specs, monkeypatch):
-    plans = _captured_batch_plans(
+    plans, fetch_plans, result = _captured_batch_plans(
         spark, specs, "q33_semi_stream_cached_join", monkeypatch
     )
     assert len(plans) == 4  # one combined action per batch
-    # the store fetch is a LeftSemi against the broadcast missed-key
-    # set — the store is scanned, never shuffled (batch 0 always has
-    # misses, so its fetch branch survives AQE pruning)
-    assert any("LeftSemi" in p for p in plans), "store fetch lost LeftSemi"
+    assert len(fetch_plans) == 4 and all(fetch_plans), (
+        "a batch's fetch leaf bypassed the adaptive checkpoint seam"
+    )
+    # the store fetch compiles to a LeftSemi of the store scan against
+    # the broadcast missed-key set — the store is scanned, never
+    # shuffled
+    initial = fetch_plans[0].split("== Initial Plan ==")[1]
+    assert re.search(r"BroadcastHashJoin [^\n]*LeftSemi", initial), (
+        "store fetch lost LeftSemi"
+    )
+    assert re.search(r"FileScan parquet [^\n]*part\.parquet", initial), (
+        "store fetch no longer scans the store"
+    )
+    # at run time a batch with misses keeps that join; an all-hit
+    # batch's empty broadcast prunes it, so the store is never read
+    # (at this scale the initial cache holds every part, so every
+    # batch is all-hit)
+    n_miss = [t.n_miss for t in result._controller.history]
+    assert len(n_miss) == 4
+    for i, (plan, misses) in enumerate(zip(fetch_plans, n_miss)):
+        final = plan.split("== Initial Plan ==")[0]
+        scans_store = "FileScan parquet" in final
+        assert scans_store == (misses > 0), (
+            f"batch {i} ({misses} misses): final fetch plan\n{final}"
+        )
     for p in plans:
         assert "SortMergeJoin" not in p, "semi-stream batch regressed to SMJ"
 
 
 def test_q48_batch_plan_no_smj(spark, specs, monkeypatch):
-    plans = _captured_batch_plans(
+    plans, _, _ = _captured_batch_plans(
         spark, specs, "q48_semi_stream_similarity", monkeypatch
     )
     assert len(plans) == 3

@@ -100,7 +100,7 @@ def test_attributor_differences_persistent_cache_metrics(spark):
         PlanTimeAttributor,
     )
 
-    # expensive cached subtree (sha2 over 1M rows, ~15+ CPU-s build)
+    # expensive cached subtree (sha2 over 1M rows, 5-15 CPU-s build)
     # + a cheap branch
     big = (
         spark.range(1_000_000)
@@ -126,20 +126,23 @@ def test_attributor_differences_persistent_cache_metrics(spark):
     primer = run_once(attr)  # first call records the baseline only
     assert primer is None
     # the baseline now holds the cumulative metrics of the priming
-    # action — dominated by the ~15+ CPU-s sha2 cache build the
-    # steady-state deltas must NOT re-attribute
+    # action — dominated by the sha2 cache build the steady-state
+    # deltas must NOT re-attribute
     build_s = sum(attr._last.values())
-    assert build_s > 5.0  # sanity: the build really was measured
     first = run_once(attr)
     second = run_once(attr)
     assert first is not None and second is not None
-    # RELATIVE bound (VERDICT r11 task 5: the old absolute 10 s bound
-    # failed under a concurrent Spark session): steady-state deltas
-    # carry only per-action scan work, which must stay well below the
-    # build cost measured under the SAME load — both sides inflate
-    # together when the host is contended, so the ratio is load-robust
-    assert first["heavy"] < 0.5 * build_s
-    assert second["heavy"] < 0.5 * build_s
+    # RELATIVE bounds only (VERDICT r11 task 5: an absolute 10 s bound
+    # failed under a concurrent Spark session, and an absolute
+    # "build_s > 5" premise read 4.7 on a warm host). Steady-state
+    # deltas carry only per-action scan work, so the build measured
+    # under the SAME load must dominate each action's TOTAL deltas —
+    # both sides inflate together when the host is contended. This is
+    # also the premise that the build really was measured: an
+    # unmeasured build leaves a scan-sized baseline no larger than a
+    # steady-state action's deltas.
+    for steady in (first, second):
+        assert sum(steady.values()) < 0.5 * build_s, (build_s, steady)
     big.unpersist()
 
 
@@ -330,10 +333,13 @@ def test_timed_node_whitelist_covers_all_time_metrics(spark):
 
 def test_attributor_survives_aqe_pruned_fetch_branch(spark):
     """The q33 regression shape (VERDICT r7 #1): a zero-miss batch
-    makes the miss/fetch subtrees empty at RUNTIME, AQE empty-relation
-    propagation deletes those union branches from the executed plan,
-    and the attributor must still return a measured split with the
-    fetch phase ~free instead of silently dropping to the estimate."""
+    makes the miss/fetch subtrees empty at RUNTIME. The fetch leaf is
+    checkpointed with AQE on, so empty-relation propagation prunes the
+    store scan out of it, and the combined action's AQE deletes the
+    empty union branches from the executed plan. The attributor must
+    still return a measured split instead of silently dropping to the
+    estimate, with the fetch phase reading exactly 0: no store scan is
+    left to time."""
     store = spark.range(60_000).select(
         F.col("id").alias("k"),
         F.sha2(F.col("id").cast("string"), 256).alias("pad"),
@@ -350,8 +356,7 @@ def test_attributor_survives_aqe_pruned_fetch_branch(spark):
         try:
             assert t.n_miss == 0
             assert t.measured  # the split survived branch pruning
-            # the pruned fetch branches can't dominate state rebuild
-            assert t.store_fetch_s <= t.cache_maintain_s
+            assert t.store_fetch_s == 0.0  # the store was never read
             return
         except AssertionError:
             if attempt == 1:

@@ -229,6 +229,25 @@ def test_znorm_equals_brute_force(spark, series):
         assert math.isclose(got[s], want[s], abs_tol=1e-6)
 
 
+def test_znorm_planted_exact_match_is_zero_not_nan(spark):
+    """The closed form d² = m − 2·Σxn·qn + Σqn² cancels to about
+    −1e-14 on an exact copy of the query (this series and query do
+    so at every copy); the distance must read 0.0, not sqrt's NaN."""
+    rng = np.random.default_rng(11)
+    vals = np.round(rng.normal(size=2000).cumsum(), 2)
+    q = vals[100:116].copy()
+    planted = [300, 700, 1100, 1500, 1900]
+    for s in planted:
+        vals[s : s + len(q)] = q
+    df = spark.createDataFrame(
+        [(i, float(v)) for i, v in enumerate(vals)], "pos long, value double"
+    )
+    got = {r.start: r.dist for r in
+           subsequence_match_znorm(df, q.tolist(), 0.5, chunk=CHUNK).collect()}
+    for s in [100] + planted:
+        assert got.get(s) == 0.0, (s, got.get(s))
+
+
 def test_znorm_exact_equals_numpy_path(spark, series):
     """The closed-form integer-sum zNorm path (oracle-reproducible)
     must agree with the numpy z-normalization to float tolerance."""
