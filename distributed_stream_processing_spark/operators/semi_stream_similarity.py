@@ -23,7 +23,8 @@ The LRU is the key registry: a key in the LRU has all of its store
 rows cached, or none exist (negative caching — probed keys absent
 from the store are not refetched every batch).
 
-LRU/eviction/controller are shared with the equi-join cache layer.
+LRU/eviction/controller are shared with the equi-join cache layer
+(streaming/semi_stream_core.py).
 
 KEY LAYOUT (r14): every per-batch join is keyed by ``sk``, the 64-bit
 xxhash64 of the signature triple (g, seg, sig), instead of the triple
@@ -53,19 +54,21 @@ reference's own 10-doc batches (484/4096 buckets) the bucket filter
 cost more than the full directory scan it pruned (0.54 s vs 0.23 s;
 tools/exp_fetch_prune*.py).
 
-STATE (r15): cache/LRU live as a base localCheckpoint plus flat
-append-only per-batch deltas (probe-key + fetch checkpoint LEAVES —
-LogicalRDDs, so no consumer can ever re-execute another batch's
-lineage); the O(state) latest-wins fold + eviction + re-checkpoint
-runs every min(compact_every, controller-window) batches. This
-removed the per-batch fixed floor (the unconditional state rewrite)
-while keeping eviction over-stay bounded by the window.
+The state (base checkpoint plus pending probe-key and fetch deltas,
+deferred compaction), the checkpoint planning of every leaf, the one
+combined action, the attribution that feeds the controller and the
+flush rule live in the shared core, streaming/semi_stream_core.py:
+DSim-Join is DS-Join's cache applied to signatures. This module
+supplies the signature strategy: the probe leaf (signature emission
+and V-selection), the LRU hit split, the key-directory fetch and the
+verification output. Like DS-Join's store fetch, the directory fetch
+leaf is planned with AQE on, so an all-hit batch never scans the
+directory.
 """
 
 from __future__ import annotations
 
 import os
-import time
 from dataclasses import dataclass, field
 from fractions import Fraction
 
@@ -76,15 +79,10 @@ from distributed_stream_processing_spark.functions.text import jaccard_parts
 from distributed_stream_processing_spark.operators.skew import bounded_broadcast
 from distributed_stream_processing_spark.streaming.cache_controller import (
     AdaptiveCacheController,
-    BatchTimings,
 )
-from distributed_stream_processing_spark.streaming.plan_timing import (
-    DeferredObservation,
-    PlanTimeAttributor,
-)
-from distributed_stream_processing_spark.streaming.checkpoint import (
-    lazy_local_checkpoint,
-    release_checkpoint,
+from distributed_stream_processing_spark.streaming.semi_stream_core import (
+    SemiStreamCore,
+    replay_in_batches,
 )
 
 # the cache/LRU/fetch key: xxhash64 of the signature triple — see the
@@ -492,21 +490,15 @@ class SimilarityStore:
 
 
 @dataclass
-class SemiStreamSimilarityJoin:
+class SemiStreamSimilarityJoin(SemiStreamCore):
     stored: DataFrame | None = None  # (id, tokens) — the remote document store
     threshold: Fraction | float = Fraction(4, 5)
     controller: AdaptiveCacheController = field(default_factory=AdaptiveCacheController)
     artifacts: SimilarityStore | None = None  # prebuilt corpus store
-    # full cache/LRU rewrite + checkpoint every K batches (r15): the
-    # per-batch state swap was the pipeline's fixed floor — empty
-    # batches cost 2.0-4.3 s rewriting O(state) rows that hadn't
-    # changed. Between compactions the state is a flat append-only
-    # union (base checkpoint + pinned per-batch probe-key/fetch
-    # leaves), so a batch's one action materializes only O(batch)
-    # rows; every min(K, controller-window)-th batch pays the
-    # O(state) latest-wins fold + eviction once (X8 lineage
-    # truncation, amortized; eviction over-stay bounded by the
-    # window).
+    # full cache/LRU rewrite + checkpoint every K batches (r15; the
+    # core's deferred compaction): the per-batch state swap was the
+    # pipeline's fixed floor — empty batches cost 2.0-4.3 s rewriting
+    # O(state) rows that hadn't changed
     compact_every: int = 8
     # pluggable keyed remote fetch (SURVEY S7; sources/fetcher.py):
     # any object with fetch(missed_keys) -> DataFrame in the cache
@@ -514,7 +506,8 @@ class SemiStreamSimilarityJoin:
     # key-directory semi-scan; a PushdownKeyedFetcher over the flat
     # signature collection turns the miss path into the external
     # WHERE sk IN (...) shape (the reference's per-partition Mongo
-    # in() lookups) a 100 TB signature store needs.
+    # in() lookups) a 100 TB signature store needs. The returned plan
+    # is checkpointed with AQE on, so it must not shuffle.
     fetcher: object | None = None
     sig_store: DataFrame | None = None
     kv_store: DataFrame | None = None
@@ -522,6 +515,12 @@ class SemiStreamSimilarityJoin:
     lru: DataFrame | None = None
     _groups: list | None = None
     _hs: dict | None = None
+
+    # core strategy: sk-keyed state in the fetch layout, output planned
+    # AQE off (every join in it is hinted)
+    key_cols = _KEY
+    row_cols = ["sk", "b_id", "b_sz", "b_kind"]
+    adaptive_out = False
 
     def __post_init__(self):
         self.threshold = Fraction(self.threshold).limit_denominator(1_000_000)
@@ -553,10 +552,14 @@ class SemiStreamSimilarityJoin:
             self.kv_store = _build_kv_directory(self.sig_store, n_part)
         spark = self.sig_store.sparkSession
         # cache rows carry the fetch layout: (sk, b_id, b_sz, b_kind)
-        self.cache = spark.createDataFrame(
-            [], "sk long, b_id long, b_sz int, b_kind int"
-        ).cache()
-        self.lru = spark.createDataFrame([], "sk long, last_seen long").cache()
+        self._init_state(
+            spark,
+            spark.createDataFrame(
+                [], "sk long, b_id long, b_sz int, b_kind int"
+            ).cache(),
+            spark.createDataFrame([], "sk long, last_seen long").cache(),
+            0,
+        )
         # probe-side signature expressions built ONCE and reused per
         # batch (see _sig_exprs: ~0.7s of py4j construction per call)
         self._probe_exprs = _sig_exprs(
@@ -581,21 +584,6 @@ class SemiStreamSimilarityJoin:
             (t.denominator * F.col("b_sz") >= t.numerator * F.col("a_sz"))
             & (t.denominator * F.col("a_sz") >= t.numerator * F.col("b_sz"))
         )
-        self._attributor = PlanTimeAttributor()
-        self._deferred = DeferredObservation()
-        # LRU row bound for the eviction-set broadcast gate: exact at
-        # each compaction (read off the 'l' branch count), grown by
-        # the batch's probe-key count between them (an upper bound —
-        # every probed key could be new). Overcounting only demotes a
-        # broadcast to the spillable tiers, never the reverse.
-        self._lru_rows: int = 0
-        # persisted artifacts backing the current state: the base
-        # checkpoints [cache, lru] from the last compaction, plus each
-        # pending batch's (batch_id, probe-key checkpoint, fetch
-        # cache) delta. Released together at the next compaction (or
-        # close()).
-        self._base_pins: list[DataFrame] = [self.cache, self.lru]
-        self._pend: list[tuple] = []
 
     def _sigs(self, df: DataFrame, prefix: str, own_group_only: bool) -> DataFrame:
         return _emit_sigs(
@@ -676,106 +664,28 @@ class SemiStreamSimilarityJoin:
         ).select("a_id", "a_sz", "sk", "b_kind")
         return direct.unionByName(chosen)
 
-    def process_batch(self, batch: DataFrame, batch_id: int) -> DataFrame:
-        """One micro-batch of query docs (id, tokens) -> verified
-        similar pairs vs the stored corpus, through the cache.
+    def _probe_input(self, batch: DataFrame) -> DataFrame:
+        return self._probe_rows(batch)
 
-        The previous batch's attribution walk (background diagnostics,
-        DeferredObservation) is joined just before this batch reads
-        ``controller.window`` — the latest point that preserves the
-        synchronous flow's semantics, so the walk genuinely overlaps
-        THIS batch's driver-side plan construction (probe signatures,
-        miss detect, verify) even for back-to-back callers like
-        run_semi_stream_similarity (ADVICE r10). Callers reading
-        ``controller.history`` after a bare process_batch must call
-        :meth:`flush_attribution`."""
-        t = self.threshold
-        # the probe side (one micro-batch of chosen probe rows) is the
-        # small side of every join below — broadcast it so the cached
-        # signature store is only ever SCANNED, never shuffled. Pinned
-        # as a CHECKPOINT LEAF, not a cache: relation dedup re-instances
-        # cache subtrees embedded across join sides, after which the
-        # CacheManager lookup misses and each consumer re-runs the
-        # whole probe emission (see the fetch note below for the
-        # measured blast radius of that failure mode)
-        probe_in = self._probe_rows(batch)
-        probe = lazy_local_checkpoint(
-            probe_in, cols=["a_id", "a_sz", "sk", "b_kind"]
-        )
+    def _hit_keys(self, keys: DataFrame) -> DataFrame:
+        # the LRU holds exactly the keys whose store rows are cached OR
+        # known absent from the store (negative caching: keys with no
+        # store rows are not refetched every batch). Scan-side (r15):
+        # broadcasting the LRU itself into the anti was a per-batch
+        # O(state) driver collect, paid even on empty batches
+        return self.lru.select(*_KEY).join(F.broadcast(keys), _KEY, "left_semi")
 
-        t0 = time.monotonic()
-        # pinned per-batch key set (lazy checkpoint, materialized by
-        # the combined action's 'p' branch): the LRU/cache chains
-        # reference it until the next compaction, so it must not
-        # recompute through the caller's batch DataFrame
-        # (toDF: the checkpoint RDD inherits the probe's expression
-        # ids; re-aliasing keeps batch-side joins against
-        # probe_keys-derived plans clear of the analyzer's
-        # conflicting-reference check)
-        # coalesce(8): the key set is batch-sized by construction, and
-        # every later read is a broadcast collect or a compaction fold
-        # — 8 partitions keep those reads off the 32-task scheduling
-        # floor that dominates EMPTY batches
-        probe_keys = lazy_local_checkpoint(
-            probe.select(*_KEY).distinct().coalesce(8), cols=list(_KEY)
-        )
-        # the LRU holds exactly the keys whose store rows are already
-        # cached OR known absent from the store (negative caching:
-        # keys with no store rows are not refetched every batch).
-        # Miss detect is SCAN-SIDE (r15): semi-join the LRU against
-        # the broadcast batch keys (one scan of state, like the kv
-        # fetch), then a tiny anti between two batch-sized sets —
-        # probe ∖ (lru ⋉ probe) ≡ probe ∖ lru. The previous shape
-        # broadcast the LRU itself into the anti-join: a per-batch
-        # O(state) driver collect (~16 MB per 1M keys, every batch,
-        # forever) — exactly the unconditional-broadcast scale risk
-        # bounded_broadcast exists to remove, paid here even on empty
-        # batches.
-        hit_keys = self.lru.select(*_KEY).join(
-            F.broadcast(probe_keys), _KEY, "left_semi"
-        )
-        # pinned as its own CHECKPOINT LEAF so the fetch plan embeds
-        # only a leaf scan: the miss-detect work (LRU semi scan +
-        # anti) is attributed to the JOIN phase via the missed_in
-        # extra instead of riding inside the fetch leaf's RDD and
-        # inflating fetch_s — the signal that grows the controller
-        # window must read ~0 on a zero-miss batch
-        missed_in = probe_keys.join(
-            F.broadcast(hit_keys), _KEY, "left_anti"
-        )
-        missed_keys = lazy_local_checkpoint(missed_in, cols=list(_KEY))
-        # the miss fetch reads the KEY DIRECTORY — one row per distinct
-        # sk, matched groups exploded back to flat cache rows. Scans
-        # rows-per-KEY with a single-long broadcast semi-join: the
+    def _default_fetch(self, missed: DataFrame) -> DataFrame:
+        # the KEY DIRECTORY (module docstring): one row per distinct sk,
+        # matched groups exploded back to flat cache rows — the
         # engine's analogue of the reference's indexed point lookup
-        # (module docstring; measured 7.9-8.6 s -> ~0.6 s per batch at
-        # the 100x store). Pinned as a CHECKPOINT LEAF (LogicalRDD),
-        # not a cache: the analyzer's relation dedup re-instances
-        # subtrees that share expression ids across join sides, after
-        # which the CacheManager's canonical lookup MISSES and the
-        # consumer silently re-executes the fetch lineage — which
-        # embeds the state view and therefore every prior pending
-        # batch's fetch, doubling per-batch job counts (measured
-        # 20 -> 1053 over seven batches on the equi twin). A leaf has
-        # no lineage to re-execute; toDF gives each batch's leaf fresh
-        # output ids.
-        # a fetcher may DECLINE (return None — AutoFetcher's scan pick
-        # with no delegate): the pipeline then runs its inline default
-        fetch_in = (
-            self.fetcher.fetch(missed_keys)
-            if self.fetcher is not None
-            else None
-        )
-        if fetch_in is None:
-            fetch_in = (
-                self.kv_store.join(F.broadcast(missed_keys), _KEY, "left_semi")
-                .select("sk", F.explode("rows").alias("r"))
-                .select("sk", "r.b_id", "r.b_sz", "r.b_kind")
-            )
-        fetched = lazy_local_checkpoint(
-            fetch_in, cols=["sk", "b_id", "b_sz", "b_kind"]
+        return (
+            self.kv_store.join(F.broadcast(missed), _KEY, "left_semi")
+            .select("sk", F.explode("rows").alias("r"))
+            .select("sk", "r.b_id", "r.b_sz", "r.b_kind")
         )
 
+    def _output(self, batch, probe, keys, missed, fetched) -> DataFrame:
         # b_kind is an equi-key: each probe row joins only the store
         # kind it targets (VSL rows name theirs; equality rows are 0)
         hit = self.cache.join(F.broadcast(probe), _KEY + ["b_kind"])
@@ -801,26 +711,18 @@ class SemiStreamSimilarityJoin:
         # then a size-laddered join. An unfiltered unhinted join
         # SHUFFLES AND SORTS THE WHOLE PAYLOAD TABLE EVERY BATCH once
         # the corpus outgrows the broadcast threshold (static AQE-off
-        # plan → SMJ; measured ~3 s of the 100x batch, corpus-linear —
-        # the same scale-killer shape the directory fetch removed from
-        # the signature side). bounded_broadcast keeps small corpora
-        # on the pinned broadcast plan and sends store-scale ones to a
-        # candidate-bounded SHJ (no sort, both sides
-        # candidate-bounded after the semi).
+        # plan → SMJ; measured ~3 s of the 100x batch, corpus-linear).
+        # bounded_broadcast keeps small corpora on the pinned broadcast
+        # plan and sends store-scale ones to a candidate-bounded SHJ
         b_side = self.rep_store
         if self._rep_rows is None or self._rep_rows > 100_000:
             # the candidate-id semi detour pays only at store scale:
             # below it the full payload table broadcasts anyway, and
             # the detour's per-batch dedup shuffle of the (candidate-
             # volume!) id column is pure overhead — sf0.1's ~1.2M-pair
-            # batches measured +3.5 s headline for nothing (r14)
-            # the candidate-id set is bounded only by the stored-doc
-            # count, and this semi is planned AQE-off inside the pinned
-            # plan — an unconditional broadcast here is the same
-            # driver-OOM shape bounded_broadcast removes elsewhere
-            # (ADVICE r14), so the ids ride the ladder gated by the
-            # driver-known stored-doc bound and degrade to a shuffled
-            # hash semi alongside the payload join's own fallback
+            # batches measured +3.5 s headline for nothing (r14). The
+            # id set is bounded only by the stored-doc count, so it
+            # rides the ladder too (ADVICE r14)
             b_ids = pair_ids.select("b_id").dropDuplicates(["b_id"])
             b_side = self.rep_store.join(
                 bounded_broadcast(b_ids, self._rep_rows), "b_id", "left_semi"
@@ -828,239 +730,14 @@ class SemiStreamSimilarityJoin:
         # payload rows are token arrays, not narrow keys, so the
         # broadcast tier gets its own cap: an in-session A/B at the
         # 100x store measured the ~108k-array-row broadcast 2.5-3.3 s
-        # FASTER per batch than the SHJ tier (shuffling both
-        # candidate-bounded sides costs more than one driver
-        # round-trip at this width), so the cap keeps store-scale
-        # corpora on broadcast and only far larger payload sets fall
-        # to the spillable tiers
+        # FASTER per batch than the SHJ tier, so the cap keeps
+        # store-scale corpora on broadcast and only far larger payload
+        # sets fall to the spillable tiers
         pairs = pair_ids.join(F.broadcast(a_reps), "a_id").join(
             bounded_broadcast(b_side, self._rep_rows, max_rows=500_000),
             "b_id",
         )
-        # lazy localCheckpoint (the X8 lineage-truncation pattern): the
-        # caller's final evaluation of the unioned batches must not
-        # recompute through this batch's (by then unpersisted) cache
-        # state, so the output is pinned to checkpoint blocks — but
-        # the pinning job is the batch's ONE combined action below,
-        # not a separate eager barrier ahead of state maintenance
-        # (round 2 ran 5 actions per batch, rounds 3-4 ran 2 with the
-        # output serialized before the state swap; this runs 1, so at
-        # thousands of batches the output tail never stalls the
-        # pipeline).
-        out_in = _verify(pairs, t, self._mapping is not None)
-        out = lazy_local_checkpoint(out_in)
-
-        # ---- signature-keyed LRU / eviction / cache rebuild ----
-        # Deferred compaction (r15): the O(state) latest-wins fold +
-        # eviction + localCheckpoint runs only at COMPACTION batches.
-        # Between them the state is a flat APPEND-ONLY union — base
-        # checkpoint + each pending batch's pinned probe-key/fetch
-        # delta, NO joins — so reading it costs one scan and zero
-        # extra jobs, and a batch's one action materializes O(batch)
-        # rows (the empty-batch floor was the unconditional rewrite).
-        # An earlier r15 draft chained the per-batch anti-join
-        # rewrites lazily instead: every chain evaluation re-ran every
-        # prior batch's broadcast subqueries, and per-batch job counts
-        # grew geometrically (measured 14 -> 29 -> 66 jobs over three
-        # sf0.1 batches) — eviction must not ride the hot path as
-        # unmaterialized joins.
-        #
-        # Eviction between compactions is DEFERRED, never lost: keys
-        # only over-stay (transparency unaffected — the LRU set still
-        # equals the keys whose rows are cached or known absent), and
-        # the compaction cadence is bounded by the CONTROLLER WINDOW
-        # (min(compact_every, window)), so a key due for eviction
-        # over-stays at most window-1 batches — with window=1 the
-        # reference's strict per-batch eviction is preserved exactly.
-        # The previous batch's background walk is joined NOW — the
-        # first controller read; everything above overlapped it.
-        self._deferred.flush()
-        window = self.controller.window
-        compact = len(self._pend) + 1 >= max(
-            1, min(self.compact_every, window)
-        )
-        # batches the compaction fold covers — captured before the
-        # release path resets _pend; maintain_s is amortized over it
-        # below (ADVICE r15)
-        n_folded = len(self._pend) + 1 if compact else 1
-        n_part = int(
-            self.sig_store.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-        # join extras precede the fetch extra (ADVICE r15), and the
-        # miss-detect rides its own leaf input (missed_in) — fetch_in
-        # embeds only the key-directory scan + one leaf-scan
-        # broadcast, so fetch_s is exactly the store-fetch cost the
-        # window policy feeds on
-        extra_roots = [
-            ("join", probe_in),
-            ("join", missed_in),
-            ("join", out_in),
-            ("fetch", fetch_in),
-        ]
-        if compact:
-            # latest-wins fold of base + every pending key set (later
-            # batches override last_seen), then the eviction filter —
-            # each anti carries an unconditional broadcast hint (key
-            # sets are batch-sized) except stale, whose bound is the
-            # tracked LRU row count (after a workload shift stale can
-            # be cache-sized; these plans are AQE-off with no runtime
-            # fallback — ADVICE r6). Runs ONCE per compaction window.
-            lru_full = self._base_pins[1]
-            cache_full = self._base_pins[0]
-            for bid_i, pk_i, f_i in self._pend + [(batch_id, probe_keys, fetched)]:
-                lru_full = lru_full.join(
-                    F.broadcast(pk_i), _KEY, "left_anti"
-                ).unionByName(pk_i.withColumn("last_seen", F.lit(bid_i)))
-                cache_full = cache_full.unionByName(f_i)
-            stale = bounded_broadcast(
-                lru_full.filter(
-                    F.col("last_seen") < batch_id - window
-                ).select(*_KEY),
-                self._lru_rows,
-            )
-            cache_in = cache_full.join(stale, _KEY, "left_anti").coalesce(
-                n_part
-            )
-            lru_in = lru_full.join(stale, _KEY, "left_anti").coalesce(n_part)
-            new_cache = lazy_local_checkpoint(cache_in)
-            new_lru = lazy_local_checkpoint(lru_in)
-            extra_roots += [("maintain", cache_in), ("maintain", lru_in)]
-        # THE one action of the batch: a single job materializes the
-        # verified output checkpoint, the per-batch pinned deltas (and
-        # on compaction batches both state checkpoints), and the
-        # controller's key counts together — output verify and state
-        # maintenance share the cluster instead of serializing
-        tagged = (
-            missed_keys.select(F.lit("m").alias("t"))
-            .unionAll(probe_keys.select(F.lit("p").alias("t")))
-            .unionAll(out.select(F.lit("o").alias("t")))
-            .unionAll(fetched.select(F.lit("x").alias("t")))
-        )
-        # phase ownership (r15): the scan-side miss detect embeds the
-        # hit-key computation (LRU semi scan + broadcasts) in the 'm'
-        # subtree — JOIN work — so m is tagged join and walked before
-        # x, leaving fetch owning exactly the key-directory scan +
-        # fetch join the controller's window policy feeds on
-        phases = ["join", "join", "join", "fetch"]
-        tags = ["m", "p", "o", "x"]
-        walk_order = [1, 0, 3, 2]
-        if compact:
-            tagged = tagged.unionAll(
-                new_cache.select(F.lit("c").alias("t"))
-            ).unionAll(new_lru.select(F.lit("l").alias("t")))
-            phases = phases + ["maintain", "maintain"]
-            tags = tags + ["c", "l"]
-            # p, m, x, c, l, o — the shared cached fetch is walked
-            # (x) before the state branches that reuse it
-            walk_order = [1, 0, 3, 4, 5, 2]
-        counts_df = tagged.groupBy("t").agg(F.count("*").alias("n"))
-        counts = {r.t: r.n for r in counts_df.collect()}
-        n_miss = int(counts.get("m", 0))
-        n_keys = int(counts.get("p", 0))
-        total_s = time.monotonic() - t0
-
-        # the probe and missed-key leaves' only consumers (hit/miss →
-        # out, fetch leaf, the m branch) ran inside the combined
-        # action above; release their blocks for real (RDD-level —
-        # DataFrame.unpersist was a no-op on checkpoint leaves and
-        # executor storage floated with GC lag, ADVICE r15)
-        release_checkpoint(probe)
-        release_checkpoint(missed_keys)
-        if compact:
-            # the compaction checkpoints absorbed every pending delta
-            # (including this batch's fetch/probe keys) — release them
-            # and the previous base together
-            for _, pk_i, f_i in self._pend:
-                release_checkpoint(pk_i)
-                release_checkpoint(f_i)
-            for d in self._base_pins:
-                release_checkpoint(d)
-            release_checkpoint(fetched)
-            release_checkpoint(probe_keys)
-            self._pend = []
-            self._base_pins = [new_cache, new_lru]
-            # exact LRU bound off the compaction's own count branch
-            self._lru_rows = int(counts.get("l", 0))
-            self.cache, self.lru = new_cache, new_lru
-        else:
-            self._pend.append((batch_id, probe_keys, fetched))
-            # upper bound: every probed key could be new to the LRU
-            self._lru_rows += n_keys
-            # flat state views over base + pendings (pure unions — the
-            # next batch reads them with one scan, no joins). A key
-            # probed in several pending batches appears with several
-            # last_seen rows; every pipeline read is set-membership
-            # (semi/anti), and the exact latest-wins fold happens at
-            # compaction.
-            cache_v, lru_v = self._base_pins[0], self._base_pins[1]
-            for bid_i, pk_i, f_i in self._pend:
-                cache_v = cache_v.unionByName(f_i)
-                lru_v = lru_v.unionByName(
-                    pk_i.withColumn("last_seen", F.lit(bid_i))
-                )
-            self.cache, self.lru = cache_v, lru_v
-        # MEASURED per-phase split from the combined action's SQL
-        # metrics: p owns the probe signature emission, m the miss
-        # detect (both join context — m embeds the hit-key semi scan),
-        # x the key-directory fetch, c/l the state rebuild (compaction
-        # batches only — between them maintenance is deferred and the
-        # phase reads ~0), o the hit/miss join + verification; x is
-        # walked before c/o so the shared cached fetch lands in the
-        # fetch phase. The walk is py4j-round-trip-
-        # bound, so it runs in the background and is joined at the
-        # next batch's entry.
-        attributor, controller = self._attributor, self.controller
-
-        def _attribute_and_observe():
-            split = attributor.attribute(
-                counts_df, phases=phases, tags=tags, walk_order=walk_order,
-                extra=extra_roots,
-            )
-            if split is not None:
-                # the compaction fold's O(state) spike is amortized
-                # over the batches it covered — the controller reads
-                # PER-BATCH maintenance, and an unamortized spike
-                # shrinks the window that sets the compaction cadence
-                # (feedback oscillation; ADVICE r15)
-                fetch_s = split["fetch"]
-                maintain_s = split.get("maintain", 0.0) / n_folded
-                join_s, measured = split["join"], True
-            else:
-                # fallback: miss-fraction attribution — the signal the
-                # reference's rule-based window policy keys on
-                # (DS_SimJoin_stream.scala:645-667)
-                miss_frac = n_miss / n_keys if n_keys else 0.0
-                fetch_s = total_s * miss_frac
-                maintain_s = total_s - fetch_s
-                join_s, measured = 0.0, False
-            controller.observe(
-                BatchTimings(
-                    batch_id, n_miss, fetch_s, maintain_s,
-                    join_s=join_s, measured=measured,
-                )
-            )
-
-        self._deferred.submit(_attribute_and_observe)
-        return out
-
-    def flush_attribution(self) -> None:
-        """Join the pending background attribution walk — required
-        before reading ``controller.history`` after the last batch."""
-        self._deferred.flush()
-
-    def close(self) -> None:
-        """Release every persisted block backing the pipeline's STATE
-        (base checkpoints + pending deltas). Batch outputs are pinned
-        to their own checkpoint blocks and stay readable. Safe to call
-        once the last batch's combined action has run; the instance
-        must not process further batches afterwards."""
-        self.flush_attribution()
-        for _, pk_i, f_i in self._pend:
-            release_checkpoint(pk_i)
-            release_checkpoint(f_i)
-        for d in self._base_pins:
-            release_checkpoint(d)
-        self._pend, self._base_pins = [], []
+        return _verify(pairs, self.threshold, self._mapping is not None)
 
 
 def run_semi_stream_similarity(
@@ -1083,25 +760,7 @@ def run_semi_stream_similarity(
         artifacts=artifacts,
         fetcher=fetcher,
     )
-    outs = []
-    for b in range(n_batches):
-        batch = stream_table.filter(F.pmod(F.col("id"), F.lit(n_batches)) == b)
-        outs.append(j.process_batch(batch, b))
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    # the last batch's background attribution must land before anyone
-    # reads the controller history off the diagnostics seam; close()
-    # releases the state blocks (the outputs are checkpoint-pinned by
-    # each batch's action and stay readable) so repeated invocations —
-    # a benchmark loop, a long session — don't accrete dead cache/LRU
-    # state in the CacheManager
-    j.close()
-    # per-invocation diagnostics seam (bench.py publishes the
-    # measured/estimated regime split): carried on the result, not a
-    # module global, so interleaved pipelines can't cross-report
-    out._controller = j.controller
-    return out
+    return j.replay(replay_in_batches(stream_table, n_batches, "id"))
 
 
 # bumped whenever the persisted store layout changes semantics; a

@@ -17,9 +17,9 @@ distributed:
   rounding-grid slack), then k-way intersection of candidates;
 * ED verify    = equi/range join of candidates x series with a
   deterministic left-to-right fold (bit-reproducible vs the DuckDB
-  oracle); DTW/zNorm verify = numpy over chunked windows
-  (mapInPandas, Arrow batches) with the LB_Keogh cascade and early
-  abandon.
+  oracle); DTW/zNorm verify = numpy over chunked windows (one
+  grouped-map call per whole chunk) with the LB_Keogh cascade and
+  early abandon.
 
 Positions are 0-based window starts; a window of width m covers
 [start, start+m-1].
@@ -987,7 +987,7 @@ def subsequence_match_ed(
 
 
 # ---------------------------------------------------------------------------
-# chunked-window numpy paths (DTW, normalized) — mapInPandas
+# chunked-window numpy paths (DTW, normalized) — one grouped map per chunk
 # ---------------------------------------------------------------------------
 
 
@@ -1009,6 +1009,18 @@ def _chunked(series: DataFrame, m: int, extra: int, chunk: int) -> DataFrame:
         )
     )
     return owned.unionByName(spill)
+
+
+def _per_chunk(series: DataFrame, m: int, chunk: int, fn, schema: str) -> DataFrame:
+    """Run ``fn(chunk_rows) -> pd.DataFrame`` once per WHOLE chunk of
+    the replicated series. It must be a grouped map: Arrow hands rows
+    to Python in record batches of at most
+    spark.sql.execution.arrow.maxRecordsPerBatch rows, and grouping
+    inside each record batch loses every window that straddles a
+    split, while a grouped map delivers each chunk in one frame."""
+    return _chunked(series, m, 0, chunk).groupBy("chunk_id").applyInPandas(
+        fn, schema=schema
+    )
 
 
 def _verify_starts(
@@ -1433,22 +1445,14 @@ def subsequence_match_dtw(
             series, cands, m, chunk, verify, "start long, dist double"
         )
 
-    def gen(batches):
-        for pdf in batches:
-            for cid, grp in pdf.groupby("chunk_id"):
-                grp = grp.sort_values("pos")
-                pos = grp["pos"].to_numpy()
-                base, hi = int(cid) * chunk, (int(cid) + 1) * chunk
-                starts = pos[(pos >= base) & (pos < hi)]
-                yield verify(
-                    pos, grp["value"].to_numpy(dtype=np.float64), starts
-                )
+    def per_chunk(grp: pd.DataFrame) -> pd.DataFrame:
+        grp = grp.sort_values("pos")
+        pos = grp["pos"].to_numpy()
+        base = int(grp["chunk_id"].iloc[0]) * chunk
+        starts = pos[(pos >= base) & (pos < base + chunk)]
+        return verify(pos, grp["value"].to_numpy(dtype=np.float64), starts)
 
-    return (
-        _chunked(series, m, 0, chunk)
-        .repartition("chunk_id")
-        .mapInPandas(gen, schema="start long, dist double")
-    )
+    return _per_chunk(series, m, chunk, per_chunk, "start long, dist double")
 
 
 def subsequence_match_znorm(
@@ -1467,78 +1471,69 @@ def subsequence_match_znorm(
     sqn, sqq = float(qn.sum()), float(np.dot(qn, qn))
     eps2 = epsilon * epsilon
 
-    def gen(batches):
-        import pandas as pdl
-
-        empty = pdl.DataFrame({"start": [], "dist": []}).astype(
+    def per_chunk(grp: pd.DataFrame) -> pd.DataFrame:
+        empty = pd.DataFrame({"start": [], "dist": []}).astype(
             {"start": "int64", "dist": "float64"}
         )
-        for pdf in batches:
-            for cid, grp in pdf.groupby("chunk_id"):
-                grp = grp.sort_values("pos")
-                pos = grp["pos"].to_numpy()
-                val = grp["value"].to_numpy(dtype=np.float64)
-                base, hi = int(cid) * chunk, (int(cid) + 1) * chunk
-                if len(val) < m:
-                    yield empty
-                    continue
-                # batched over the window axis (r19, guide §4.2 — the
-                # same rewrite 55b2d79 gave the q31 DTW verify): the
-                # per-window interpreted loop cost ~0.9 ms/window;
-                # these are ~2m numpy ops over the whole chunk.
-                # Ownership/gap checks are the scalar loop's two
-                # (strictly increasing int positions: endpoint
-                # equality implies the window is gap-free).
-                starts = pos[: len(val) - m + 1]
-                own = (
-                    (starts >= base)
-                    & (starts < hi)
-                    & (pos[m - 1 :] == starts + m - 1)
-                )
-                idx = np.flatnonzero(own)
-                if not len(idx):
-                    yield empty
-                    continue
-                # per-window moments + one BLAS matmul instead of
-                # materializing normalized windows: with population
-                # std, Σxn² = m and Σxn·qn = (Σx·qn − μ·Σqn)/σ, so
-                # d² = m − 2·Σxn·qn + Σqn² (σ = 0 → xn = 0 → d² =
-                # Σqn²) — the same closed form the exact integer-sum
-                # path evaluates, here on float moments (agrees with
-                # the scalar loop to ~1e-11 abs; both round to 6dp)
-                X = np.lib.stride_tricks.sliding_window_view(val, m)[idx]
-                mu = X.sum(axis=1) / m
-                var = np.maximum(
-                    np.einsum("ij,ij->i", X, X) / m - mu * mu, 0.0
-                )
-                sd = np.sqrt(var)
-                pos_sd = sd > 0
-                sxq = X @ qn
-                # clamped like the cnsm twin: an exact match cancels
-                # to ±1e-14, and sqrt of a negative d² is NaN
-                d2 = np.maximum(
-                    np.where(
-                        pos_sd,
-                        m
-                        - 2.0 * (sxq - mu * sqn) / np.where(pos_sd, sd, 1.0)
-                        + sqq,
-                        sqq,
-                    ),
-                    0.0,
-                )
-                hit = d2 <= eps2
-                yield pdl.DataFrame(
-                    {
-                        "start": starts[idx][hit].astype("int64"),
-                        "dist": np.round(np.sqrt(d2[hit]), 6),
-                    }
-                )
+        grp = grp.sort_values("pos")
+        pos = grp["pos"].to_numpy()
+        val = grp["value"].to_numpy(dtype=np.float64)
+        base = int(grp["chunk_id"].iloc[0]) * chunk
+        hi = base + chunk
+        if len(val) < m:
+            return empty
+        # batched over the window axis (r19, guide §4.2 — the
+        # same rewrite 55b2d79 gave the q31 DTW verify): the
+        # per-window interpreted loop cost ~0.9 ms/window;
+        # these are ~2m numpy ops over the whole chunk.
+        # Ownership/gap checks are the scalar loop's two
+        # (strictly increasing int positions: endpoint
+        # equality implies the window is gap-free).
+        starts = pos[: len(val) - m + 1]
+        own = (
+            (starts >= base)
+            & (starts < hi)
+            & (pos[m - 1 :] == starts + m - 1)
+        )
+        idx = np.flatnonzero(own)
+        if not len(idx):
+            return empty
+        # per-window moments + one BLAS matmul instead of
+        # materializing normalized windows: with population
+        # std, Σxn² = m and Σxn·qn = (Σx·qn − μ·Σqn)/σ, so
+        # d² = m − 2·Σxn·qn + Σqn² (σ = 0 → xn = 0 → d² =
+        # Σqn²) — the same closed form the exact integer-sum
+        # path evaluates, here on float moments (agrees with
+        # the scalar loop to ~1e-11 abs; both round to 6dp)
+        X = np.lib.stride_tricks.sliding_window_view(val, m)[idx]
+        mu = X.sum(axis=1) / m
+        var = np.maximum(
+            np.einsum("ij,ij->i", X, X) / m - mu * mu, 0.0
+        )
+        sd = np.sqrt(var)
+        pos_sd = sd > 0
+        sxq = X @ qn
+        # clamped like the cnsm twin: an exact match cancels
+        # to ±1e-14, and sqrt of a negative d² is NaN
+        d2 = np.maximum(
+            np.where(
+                pos_sd,
+                m
+                - 2.0 * (sxq - mu * sqn) / np.where(pos_sd, sd, 1.0)
+                + sqq,
+                sqq,
+            ),
+            0.0,
+        )
+        hit = d2 <= eps2
+        return pd.DataFrame(
+            {
+                "start": starts[idx][hit].astype("int64"),
+                "dist": np.round(np.sqrt(d2[hit]), 6),
+            }
+        )
 
-    return (
-        _chunked(series, m, 0, chunk)
-        .repartition("chunk_id")
-        .mapInPandas(gen, schema="start long, dist double")
-    )
+    return _per_chunk(series, m, chunk, per_chunk, "start long, dist double")
 
 
 def subsequence_match_cnsm(
@@ -1573,10 +1568,8 @@ def subsequence_match_cnsm(
     sqc = float(qc.sum())
     sq_raw, sqq_raw = float(q.sum()), float(np.dot(q, q))
 
-    def gen(batches):
-        import pandas as pdl
-
-        empty = pdl.DataFrame(
+    def per_chunk(grp: pd.DataFrame) -> pd.DataFrame:
+        empty = pd.DataFrame(
             {"start": [], "dist": [], "alpha": [], "beta": []}
         ).astype(
             {
@@ -1586,70 +1579,66 @@ def subsequence_match_cnsm(
                 "beta": "float64",
             }
         )
-        for pdf in batches:
-            for cid, grp in pdf.groupby("chunk_id"):
-                grp = grp.sort_values("pos")
-                pos = grp["pos"].to_numpy()
-                val = grp["value"].to_numpy(dtype=np.float64)
-                base, hi = int(cid) * chunk, (int(cid) + 1) * chunk
-                if len(val) < m:
-                    yield empty
-                    continue
-                # batched over the window axis (r19, guide §4.2): the
-                # clamped least-squares fit is one matmul + O(m)
-                # vector ops for the whole chunk instead of a
-                # ~0.9 ms/window interpreted loop
-                starts = pos[: len(val) - m + 1]
-                own = (
-                    (starts >= base)
-                    & (starts < hi)
-                    & (pos[m - 1 :] == starts + m - 1)
-                )
-                idx = np.flatnonzero(own)
-                if not len(idx):
-                    yield empty
-                    continue
-                # per-window moments + two BLAS matmuls instead of
-                # materializing residual windows: a = (Σx·qc − x̄·Σqc)
-                # / Σqc², and the residual expands in the window's
-                # raw moments — d² = Σx² − 2aΣxq − 2bΣx + a²Σq² +
-                # 2abΣq + m·b² (the same expansion the exact
-                # integer-sum path evaluates; agrees with the scalar
-                # loop to ~1e-9 abs, both round to 6dp)
-                X = np.lib.stride_tricks.sliding_window_view(val, m)[idx]
-                sx = X.sum(axis=1)
-                xm = sx / m
-                if qvar > 0:
-                    a = (X @ qc - xm * sqc) / qvar
-                else:
-                    a = np.ones(len(idx))
-                a = np.clip(a, a_lo, a_hi)
-                b = np.clip(xm - a * qm, -beta, beta)
-                sxx = np.einsum("ij,ij->i", X, X)
-                sxq = X @ q
-                d2 = np.maximum(
-                    sxx
-                    - 2.0 * a * sxq
-                    - 2.0 * b * sx
-                    + a * a * sqq_raw
-                    + 2.0 * a * b * sq_raw
-                    + m * b * b,
-                    0.0,
-                )
-                hit = d2 <= eps2
-                yield pdl.DataFrame(
-                    {
-                        "start": starts[idx][hit].astype("int64"),
-                        "dist": np.round(np.sqrt(d2[hit]), 6),
-                        "alpha": np.round(a[hit], 6),
-                        "beta": np.round(b[hit], 6),
-                    }
-                )
+        grp = grp.sort_values("pos")
+        pos = grp["pos"].to_numpy()
+        val = grp["value"].to_numpy(dtype=np.float64)
+        base = int(grp["chunk_id"].iloc[0]) * chunk
+        hi = base + chunk
+        if len(val) < m:
+            return empty
+        # batched over the window axis (r19, guide §4.2): the
+        # clamped least-squares fit is one matmul + O(m)
+        # vector ops for the whole chunk instead of a
+        # ~0.9 ms/window interpreted loop
+        starts = pos[: len(val) - m + 1]
+        own = (
+            (starts >= base)
+            & (starts < hi)
+            & (pos[m - 1 :] == starts + m - 1)
+        )
+        idx = np.flatnonzero(own)
+        if not len(idx):
+            return empty
+        # per-window moments + two BLAS matmuls instead of
+        # materializing residual windows: a = (Σx·qc − x̄·Σqc)
+        # / Σqc², and the residual expands in the window's
+        # raw moments — d² = Σx² − 2aΣxq − 2bΣx + a²Σq² +
+        # 2abΣq + m·b² (the same expansion the exact
+        # integer-sum path evaluates; agrees with the scalar
+        # loop to ~1e-9 abs, both round to 6dp)
+        X = np.lib.stride_tricks.sliding_window_view(val, m)[idx]
+        sx = X.sum(axis=1)
+        xm = sx / m
+        if qvar > 0:
+            a = (X @ qc - xm * sqc) / qvar
+        else:
+            a = np.ones(len(idx))
+        a = np.clip(a, a_lo, a_hi)
+        b = np.clip(xm - a * qm, -beta, beta)
+        sxx = np.einsum("ij,ij->i", X, X)
+        sxq = X @ q
+        d2 = np.maximum(
+            sxx
+            - 2.0 * a * sxq
+            - 2.0 * b * sx
+            + a * a * sqq_raw
+            + 2.0 * a * b * sq_raw
+            + m * b * b,
+            0.0,
+        )
+        hit = d2 <= eps2
+        return pd.DataFrame(
+            {
+                "start": starts[idx][hit].astype("int64"),
+                "dist": np.round(np.sqrt(d2[hit]), 6),
+                "alpha": np.round(a[hit], 6),
+                "beta": np.round(b[hit], 6),
+            }
+        )
 
-    return (
-        _chunked(series, m, 0, chunk)
-        .repartition("chunk_id")
-        .mapInPandas(gen, schema="start long, dist double, alpha double, beta double")
+    return _per_chunk(
+        series, m, chunk, per_chunk,
+        "start long, dist double, alpha double, beta double",
     )
 
 

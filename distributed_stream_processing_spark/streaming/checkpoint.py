@@ -27,10 +27,12 @@ broadcast), so AQE executes exactly the job static planning would.
 What it adds is runtime re-optimization on the materialized build
 side: an EMPTY broadcast under an inner or semi join propagates to an
 empty relation, the probe side is never planned, and the leaf is an
-RDD with no partitions. DS-Join's store fetch,
-``store ⋉ broadcast(missed_keys)``, is that shape: an all-hit batch
-then never reads the store, while a batch with misses gets the same
-broadcast LeftSemi as the static plan. A plan with a shuffle must not
+RDD with no partitions. Both semi-stream pipelines' fetch leaves are
+that shape (streaming/semi_stream_core.py): DS-Join's
+``store ⋉ broadcast(missed_keys)`` and DSim's key-directory
+``kv_store ⋉ broadcast(missed_keys)``. An all-hit batch then never
+reads the store, while a batch with misses gets the same broadcast
+LeftSemi as the static plan. A plan with a shuffle must not
 use it — the shuffle would run at the checkpoint call, outside the
 batch's combined action.
 """
@@ -44,22 +46,26 @@ from pyspark.sql import DataFrame
 # silently broke (a py4j/Spark upgrade changing the LogicalRDD shape),
 # every release would no-op and state would revert to leak-by-GC, the
 # exact failure mode this module exists to kill. The counters make
-# that visible: the soak (tools/soak_q48.py) asserts succeeded ==
-# attempted on top of its persisted-RDD boundedness check.
+# that visible: tests/test_deferred_compaction.py asserts succeeded ==
+# attempted over both pipelines' runs, on top of their persisted-RDD
+# boundedness check.
 RELEASE_STATS = {"attempted": 0, "succeeded": 0}
 
 
 def _local_checkpoint(
-    df: DataFrame, cols: list[str] | None, adaptive: bool
+    df: DataFrame, cols: list[str] | None, adaptive: bool | None
 ) -> DataFrame:
-    spark = df.sparkSession
-    key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "true" if adaptive else "false")
-    try:
+    if adaptive is None:
         out = df.localCheckpoint(eager=False)
-    finally:
-        spark.conf.set(key, prev)
+    else:
+        spark = df.sparkSession
+        key = "spark.sql.adaptive.enabled"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "true" if adaptive else "false")
+        try:
+            out = df.localCheckpoint(eager=False)
+        finally:
+            spark.conf.set(key, prev)
     jrdd = None
     try:
         plan = out._jdf.queryExecution().analyzed()
@@ -102,6 +108,13 @@ def adaptive_local_checkpoint(
     return _local_checkpoint(df, cols, adaptive=True)
 
 
+def local_checkpoint(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
+    """``DataFrame.localCheckpoint(eager=False)`` under the session's own
+    planner, with the ``cols`` rename and ``_ckpt_jrdd`` release handle
+    of the two helpers above."""
+    return _local_checkpoint(df, cols, adaptive=None)
+
+
 def release_checkpoint(df: DataFrame) -> None:
     """Actually free the executor blocks behind a pipeline state pin.
 
@@ -131,7 +144,7 @@ def release_checkpoint(df: DataFrame) -> None:
         except Exception:
             # best-effort by contract (a release can lose a race with
             # session teardown) — but counted, so a SYSTEMATICALLY
-            # broken handle fails the soak's release assertion instead
+            # broken handle fails the release-accounting test instead
             # of silently reverting to leak-by-GC
             pass
         df._ckpt_jrdd = None

@@ -66,57 +66,60 @@ def batch_best_match(
         (float(np.abs(q).max()) for _, q in items if len(q)), default=0.0
     )
 
-    from distributed_stream_processing_spark.operators.subsequence_match import _chunked
+    from distributed_stream_processing_spark.operators.subsequence_match import (
+        _per_chunk,
+    )
 
-    def gen(batches):
-        for pdf in batches:
-            for cid, grp in pdf.groupby("chunk_id"):
-                grp = grp.sort_values("pos")
-                pos = grp["pos"].to_numpy()
-                val = grp["value"].to_numpy(dtype=np.float64)
-                base, hi = int(cid) * chunk, (int(cid) + 1) * chunk
-                if len(val) < m:
-                    continue
-                if value_scale is not None:
-                    sv = val * value_scale
-                    if len(sv) and float(np.abs(sv - np.rint(sv)).max()) > 1e-6:
-                        raise ValueError(
-                            f"value_scale={value_scale} but series values "
-                            "are not fixed-decimal at that scale"
-                        )
-                    val = np.rint(sv).astype(np.int64)
-                    # int64-exactness guard: the double-typed merge
-                    # column is exact only while d2 < 2^53
-                    dmax = float(np.abs(val).max()) + _q_absmax
-                    if dmax * dmax * m >= 2.0**53:
-                        raise ValueError(
-                            "scaled |diff|^2 * m may exceed 2^53 — exact "
-                            "int64 distance contract would break; lower "
-                            "value_scale or shorten the window"
-                        )
-                X = np.lib.stride_tricks.sliding_window_view(val, m)
-                starts = pos[: len(val) - m + 1]
-                own = (
-                    (starts >= base)
-                    & (starts < hi)
-                    & (pos[m - 1 :] == starts + m - 1)
+    empty = pd.DataFrame({"window_id": [], "pos": [], "d2": []}).astype(
+        {"window_id": "int64", "pos": "int64", "d2": "float64"}
+    )
+
+    def score(grp: pd.DataFrame) -> pd.DataFrame:
+        grp = grp.sort_values("pos")
+        pos = grp["pos"].to_numpy()
+        val = grp["value"].to_numpy(dtype=np.float64)
+        base = int(grp["chunk_id"].iloc[0]) * chunk
+        hi = base + chunk
+        if len(val) < m:
+            return empty
+        if value_scale is not None:
+            sv = val * value_scale
+            if len(sv) and float(np.abs(sv - np.rint(sv)).max()) > 1e-6:
+                raise ValueError(
+                    f"value_scale={value_scale} but series values "
+                    "are not fixed-decimal at that scale"
                 )
-                if not own.any():
-                    continue
-                Xo, so = X[own], starts[own]
-                wids, bpos, bd2 = [], [], []
-                for wid, q in items:
-                    d2 = ((Xo - q) ** 2).sum(axis=1)
-                    i = int(np.argmin(d2))
-                    wids.append(wid)
-                    bpos.append(int(so[i]))
-                    bd2.append(float(d2[i]))
-                yield pd.DataFrame({"window_id": wids, "pos": bpos, "d2": bd2})
+            val = np.rint(sv).astype(np.int64)
+            # int64-exactness guard: the double-typed merge
+            # column is exact only while d2 < 2^53
+            dmax = float(np.abs(val).max()) + _q_absmax
+            if dmax * dmax * m >= 2.0**53:
+                raise ValueError(
+                    "scaled |diff|^2 * m may exceed 2^53 — exact "
+                    "int64 distance contract would break; lower "
+                    "value_scale or shorten the window"
+                )
+        X = np.lib.stride_tricks.sliding_window_view(val, m)
+        starts = pos[: len(val) - m + 1]
+        own = (
+            (starts >= base)
+            & (starts < hi)
+            & (pos[m - 1 :] == starts + m - 1)
+        )
+        if not own.any():
+            return empty
+        Xo, so = X[own], starts[own]
+        wids, bpos, bd2 = [], [], []
+        for wid, q in items:
+            d2 = ((Xo - q) ** 2).sum(axis=1)
+            i = int(np.argmin(d2))
+            wids.append(wid)
+            bpos.append(int(so[i]))
+            bd2.append(float(d2[i]))
+        return pd.DataFrame({"window_id": wids, "pos": bpos, "d2": bd2})
 
-    per_chunk = (
-        _chunked(series, m, 0, chunk)
-        .repartition("chunk_id")
-        .mapInPandas(gen, schema="window_id long, pos long, d2 double")
+    per_chunk = _per_chunk(
+        series, m, chunk, score, "window_id long, pos long, d2 double"
     )
     best = (
         per_chunk.groupBy("window_id")

@@ -176,15 +176,17 @@ class DeferredObservation:
 
     The plan walk is pure diagnostics: it reads the completed action's
     SQL metrics and feeds the caching-window controller. Nothing in it
-    blocks the NEXT batch until the controller's window is read, so
+    blocks the NEXT batch until that batch launches its first job, so
     the pipelines submit the walk here at batch end and ``flush()``
-    just before the next batch's FIRST controller read (its eviction
-    window), and at pipeline end — the ~0.17 s of py4j round trips
-    overlap the next batch's driver-side plan construction up to that
-    point even when batches run back-to-back (VERDICT r9 task 1: the
-    attributor walk WAS the q48 headline creep; ADVICE r10 moved the
-    flush off the batch entry, where back-to-back callers got no
-    overlap at all).
+    just before the next batch's first checkpoint call, and at
+    pipeline end. Every job a batch runs before its combined action
+    starts at a checkpoint call, and those jobs move the cached
+    relations' SQL-metric accumulators the walk reads, so a later
+    flush would race the walk (streaming/semi_stream_core.py, the
+    flush rule). The ~0.17 s of py4j round trips still overlap the
+    previous batch's tail and the next batch's probe-plan construction
+    (VERDICT r9 task 1: the attributor walk WAS the q48 headline
+    creep).
 
     Contract: at most one pending walk (submit flushes any prior one);
     ``flush()`` re-raises an exception from the background walk so

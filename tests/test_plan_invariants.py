@@ -173,14 +173,12 @@ def _captured_batch_plans(spark, specs, name, monkeypatch):
     (LogicalRDD), so the combined action prints them as Scan
     ExistingRDD — their join/explode shapes only exist in the
     checkpoint inputs' resolved plans, captured here at the
-    checkpoint seams. ``fetch_plans`` holds only the leaves pinned by
-    adaptive_local_checkpoint (the DS-Join store fetch), so a fetch
-    assertion cannot be met by some other leaf's join."""
-    from distributed_stream_processing_spark.operators import (
-        semi_stream_join as ssj,
-    )
-    from distributed_stream_processing_spark.operators import (
-        semi_stream_similarity as sss,
+    checkpoint seams, which are all called from the shared pipeline
+    core. ``fetch_plans`` holds only the leaves pinned by
+    adaptive_local_checkpoint (both pipelines' store fetch), so a
+    fetch assertion cannot be met by some other leaf's join."""
+    from distributed_stream_processing_spark.streaming import (
+        semi_stream_core as core,
     )
     from distributed_stream_processing_spark.streaming.checkpoint import (
         adaptive_local_checkpoint as real_adaptive,
@@ -213,12 +211,12 @@ def _captured_batch_plans(spark, specs, name, monkeypatch):
         return None  # estimate fallback — capture only
 
     monkeypatch.setattr(PlanTimeAttributor, "attribute", capture)
-    for mod in (ssj, sss):
-        monkeypatch.setattr(
-            mod, "lazy_local_checkpoint", capturing(real_ckpt, pending)
-        )
     monkeypatch.setattr(
-        ssj, "adaptive_local_checkpoint", capturing(real_adaptive, pending_fetch)
+        core, "lazy_local_checkpoint", capturing(real_ckpt, pending)
+    )
+    monkeypatch.setattr(
+        core, "adaptive_local_checkpoint",
+        capturing(real_adaptive, pending_fetch),
     )
     result = specs[name].fn(spark, SF)  # per-batch actions run inside
     return plans, fetch_plans, result
@@ -259,10 +257,24 @@ def test_q33_batch_plan_left_semi_no_smj(spark, specs, monkeypatch):
 
 
 def test_q48_batch_plan_no_smj(spark, specs, monkeypatch):
-    plans, _, _ = _captured_batch_plans(
+    plans, fetch_plans, result = _captured_batch_plans(
         spark, specs, "q48_semi_stream_similarity", monkeypatch
     )
     assert len(plans) == 3
+    assert len(fetch_plans) == 3 and all(fetch_plans), (
+        "a batch's fetch leaf bypassed the adaptive checkpoint seam"
+    )
+    # the q33 check: a batch with misses reads the store (the cached
+    # key directory, or a disk-backed flat collection through the
+    # pushdown fetcher); an all-hit batch's empty broadcast prunes it
+    n_miss = [t.n_miss for t in result._controller.history]
+    assert len(n_miss) == 3
+    for i, (plan, misses) in enumerate(zip(fetch_plans, n_miss)):
+        final = plan.split("== Initial Plan ==")[0]
+        scans_directory = "InMemoryTableScan" in final or "FileScan" in final
+        assert scans_directory == (misses > 0), (
+            f"batch {i} ({misses} misses): final fetch plan\n{final}"
+        )
     for p in plans:
         assert "SortMergeJoin" not in p, "similarity batch regressed to SMJ"
         # candidate pairs join payloads back through broadcasts at
@@ -272,7 +284,8 @@ def test_q48_batch_plan_no_smj(spark, specs, monkeypatch):
     # r14 fetch shape: the miss fetch reads the sk-keyed KEY DIRECTORY
     # (LeftSemi against the broadcast missed keys, matched groups
     # exploded) — never a flat-store scan keyed by the signature
-    # triple. Batch 0 always has misses, so its fetch survives AQE.
+    # triple. Batch 0 starts from an empty cache, so it always has
+    # misses and its fetch survives AQE.
     # The explode may print as explode(rows#...) or, since r15's
     # deferred compaction left only the count branch's re-derived
     # instance in non-compaction plans, as the nested-column-pruned

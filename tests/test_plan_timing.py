@@ -11,10 +11,14 @@ pair while the controller trace semantics stay unchanged.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from distributed_stream_processing_spark.operators.semi_stream_join import (
     SemiStreamJoin,
+)
+from distributed_stream_processing_spark.streaming.plan_timing import (
+    DeferredObservation,
 )
 
 
@@ -331,28 +335,43 @@ def test_timed_node_whitelist_covers_all_time_metrics(spark):
     )
 
 
-def test_attributor_survives_aqe_pruned_fetch_branch(spark):
+@pytest.mark.parametrize("kind", ["dsjoin", "dsim"])
+def test_attributor_survives_aqe_pruned_fetch_branch(
+    spark, semi_stream_cases, kind
+):
     """The q33 regression shape (VERDICT r7 #1): a zero-miss batch
     makes the miss/fetch subtrees empty at RUNTIME. The fetch leaf is
     checkpointed with AQE on, so empty-relation propagation prunes the
-    store scan out of it, and the combined action's AQE deletes the
-    empty union branches from the executed plan. The attributor must
-    still return a measured split instead of silently dropping to the
-    estimate, with the fetch phase reading exactly 0: no store scan is
-    left to time."""
-    store = spark.range(60_000).select(
-        F.col("id").alias("k"),
-        F.sha2(F.col("id").cast("string"), 256).alias("pad"),
-    )
-    batch = spark.range(20_000).select(
-        F.col("id").alias("k"), F.lit(1).alias("v")
-    )
+    store scan (DSim: the key-directory scan) out of it, and the
+    combined action's AQE deletes the empty union branches from the
+    executed plan. The attributor must still return a measured split
+    instead of silently dropping to the estimate, with the fetch phase
+    reading exactly 0: no store scan is left to time."""
+    if kind == "dsjoin":
+        store = spark.range(60_000).select(
+            F.col("id").alias("k"),
+            F.sha2(F.col("id").cast("string"), 256).alias("pad"),
+        )
+        batch = spark.range(20_000).select(
+            F.col("id").alias("k"), F.lit(1).alias("v")
+        )
+
+        def make():
+            return SemiStreamJoin(store=store, key="k", compact_every=1)
+    else:
+        case = semi_stream_cases["dsim"]
+        batch = case.batch(0)
+
+        def make():
+            return case.make(compact_every=1)
+
     for attempt in range(2):
-        j = SemiStreamJoin(store=store, key="k", compact_every=1)
+        j = make()
         j.process_batch(batch, 0)  # primes the baseline; misses all
         j.process_batch(batch, 1)  # same keys cached -> zero misses
         j.flush_attribution()
         t = j.controller.history[1]
+        j.close()
         try:
             assert t.n_miss == 0
             assert t.measured  # the split survived branch pruning
@@ -361,3 +380,37 @@ def test_attributor_survives_aqe_pruned_fetch_branch(spark):
         except AssertionError:
             if attempt == 1:
                 raise
+
+
+@pytest.mark.parametrize("kind", ["dsjoin", "dsim"])
+def test_walk_is_joined_before_the_batch_launches_a_job(
+    spark, semi_stream_cases, kind, monkeypatch
+):
+    """Every job a batch launches before its combined action starts at
+    a checkpoint call, and those jobs move the SQL-metric accumulators
+    the previous batch's background walk is reading. So the walk must
+    be joined before the batch's first job: zero jobs between
+    process_batch entry and the flush."""
+    case = semi_stream_cases[kind]
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    at_flush: list[int] = []
+    real_flush = DeferredObservation.flush
+
+    def flush(self):
+        at_flush.append(sched.nextJobId())
+        return real_flush(self)
+
+    monkeypatch.setattr(DeferredObservation, "flush", flush)
+    j = case.make()
+    try:
+        for b in range(3):
+            at_flush.clear()
+            entry = sched.nextJobId()
+            j.process_batch(case.batch(b), b)
+            assert at_flush, f"batch {b}: the walk was never joined"
+            assert at_flush[0] - entry == 0, (
+                f"batch {b}: {at_flush[0] - entry} jobs ran before the "
+                "previous batch's walk was joined"
+            )
+    finally:
+        j.close()

@@ -155,6 +155,23 @@ def test_batch_best_match_finds_planted(spark):
     assert got[1][0] == 1200 and got[1][1] == 0.0
 
 
+def test_batch_best_match_window_across_arrow_batch_split(
+    spark, small_arrow_batches
+):
+    """Every 50-point window straddles a split of the 8-row Arrow
+    record batches; scoring per record batch lost all of them and
+    returned no match, or a wrong best match when a batch did hold
+    other whole windows. The planted windows must still win."""
+    rng = np.random.default_rng(3)
+    vals = np.round(rng.normal(0, 1, 2000).cumsum(), 2)
+    df = spark.createDataFrame(
+        [(i, float(v)) for i, v in enumerate(vals)], "pos long, value double"
+    )
+    got = batch_best_match(df, {0: vals[300:350], 1: vals[1200:1250]}, chunk=512)
+    assert got.get(0, (None,))[0] == 300 and got[0][1] == 0.0
+    assert got.get(1, (None,))[0] == 1200 and got[1][1] == 0.0
+
+
 def test_sgd_matches_numpy_reference():
     rng = np.random.default_rng(7)
     X = rng.normal(size=(40, 6))

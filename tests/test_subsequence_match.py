@@ -15,6 +15,7 @@ from distributed_stream_processing_spark.operators.subsequence_match import (
     build_kv_index,
     plan_segments,
     sliding_stats,
+    subsequence_match_cnsm,
     subsequence_match_dtw,
     subsequence_match_ed,
     subsequence_match_znorm,
@@ -246,6 +247,26 @@ def test_znorm_planted_exact_match_is_zero_not_nan(spark):
            subsequence_match_znorm(df, q.tolist(), 0.5, chunk=CHUNK).collect()}
     for s in [100] + planted:
         assert got.get(s) == 0.0, (s, got.get(s))
+
+
+@pytest.mark.parametrize("match", ["dtw", "znorm", "cnsm"])
+def test_window_across_arrow_batch_split_is_found(
+    spark, series, small_arrow_batches, match
+):
+    """Chunk rows reach Python in Arrow record batches of at most
+    maxRecordsPerBatch rows. Here every 60-point window straddles a
+    split of the 8-row batches; a per-record-batch grouping saw no
+    whole window at all. The planted exact copy must still match at
+    distance 0 (cNSM's float moments leave ~2e-6)."""
+    df, arr = series
+    q = arr[700 : 700 + M].tolist()
+    run = {
+        "dtw": lambda: subsequence_match_dtw(df, q, 0.5, 3, chunk=CHUNK),
+        "znorm": lambda: subsequence_match_znorm(df, q, 0.5, chunk=CHUNK),
+        "cnsm": lambda: subsequence_match_cnsm(df, q, 0.5, chunk=CHUNK),
+    }[match]
+    got = {r.start: r.dist for r in run().collect()}
+    assert 700 in got and got[700] <= 1e-5, got.get(700)
 
 
 def test_znorm_exact_equals_numpy_path(spark, series):
